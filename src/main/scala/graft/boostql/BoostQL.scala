@@ -204,7 +204,7 @@ object BoostQL {
     * keys. */
   def sql(query: String,
       families: Map[(String, String), DataFrame]): DataFrame =
-    query match {
+    withoutLeadingComments(query) match {
       case showRe(dom) =>
         val spark = families.headOption.map(_._2.sparkSession).getOrElse(
           throw Compiler.CompileException(
@@ -1149,7 +1149,7 @@ object BoostQL {
   }
 
   def sql(query: String, families: ((String, String)) => DataFrame): DataFrame =
-    query match {
+    withoutLeadingComments(query) match {
       case showRe(_) => throw Compiler.CompileException(
         "SHOW FAMILIES needs an enumerable registry — pass the families " +
           "as a Map (the sql(query, Map) overload); a resolver function " +
@@ -1187,8 +1187,17 @@ object BoostQL {
             s"queries; use BoostQL.$entry(stmt, …) " +
             "(INSERT/UPSERT/MERGE/CREATE take the families resolver, " +
             "DELETE/UPDATE/DROP/REFRESH take the warehouse root)")
-      case _ => Compiler.compile(Parser.parseStmt(query), families)
+      case stmt => Compiler.compile(Parser.parseStmt(stmt), families)
     }
+
+  /** `query` without its leading `--` and `/* */` comments. The lexer
+    * skips comments anywhere, but the statement patterns [[sql]]
+    * dispatches on anchor at the first token, so they are dropped once
+    * before dispatch. */
+  private def withoutLeadingComments(query: String): String =
+    leadingCommentsRe.replaceFirstIn(query, "")
+
+  private val leadingCommentsRe = """(?s)^(?:\s|--[^\n]*|/\*(?!\+).*?\*/)*""".r
 
   private val dmlRe =
     """(?is)^\s*(insert|upsert|delete|update|merge|create|drop|refresh)\b.*$""".r
@@ -2333,7 +2342,9 @@ object BoostQL {
     * `[windowStart, windowEnd)` execution window (executor.go:239-252,
     * an Executor parameter there, not SQL). Every family frame is
     * range-filtered before series resolution, so the bound reaches the
-    * parquet scan (row-group stats + dt partition pruning when present).
+    * parquet scan: row-group stats, plus dt partition pruning on a
+    * family opened with [[TimeSeriesTable.open]] — the same pruning a
+    * WHERE `ts` bound gets there.
     */
   def sql(query: String, families: ((String, String)) => DataFrame,
       windowStart: java.sql.Timestamp, windowEnd: java.sql.Timestamp): DataFrame =

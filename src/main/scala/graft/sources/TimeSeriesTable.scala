@@ -19,12 +19,19 @@ import org.apache.spark.sql.types._
   * (core/symtable.go:28-55) — collapses into Spark partitioning, shuffle
   * sort, and parquet dictionary encoding respectively.
   *
-  * Scale stance: writes are partitioned by event date so time-range reads
-  * prune partitions; within a file, rows are sorted by (series, ts) so
-  * parquet row-group min/max stats prune series scans. At 100 TB this is
-  * the layout that keeps a `WHERE series = 'cpu' AND ts BETWEEN ...`
-  * query reading only the touched dates' files and only the row groups
-  * containing that series.
+  * Scale stance: writes are partitioned by event date, and within a file
+  * rows are sorted by (series, ts) so parquet row-group min/max stats
+  * prune series scans. On a frame opened with [[open]], conjunctive
+  * WHERE `ts` bounds also prune date partitions ([[FamilyScan]] derives
+  * the `dt` bounds). At 100 TB this is the layout that keeps a
+  * `WHERE series = 'cpu' AND ts BETWEEN ...` query reading only the
+  * touched dates' files and only the row groups containing that series.
+  *
+  * Layout contract: `dt = to_date(ts)` in the session time zone. Every
+  * family writer derives `dt` that way and the derived `dt` bounds use
+  * the reading session's time zone, so a family must be read in the
+  * time zone it was written in (every session in this repository runs
+  * in UTC).
   */
 object TimeSeriesTable {
   val SchemaColumns: Seq[String] = Seq("series", "ts", "value", "tags", "attributes")
@@ -85,11 +92,16 @@ object TimeSeriesTable {
   /** Open a family from a warehouse root: `root/domain/family/`.
     * Format is parquet by default; orc/json/csv are supported for
     * interchange (the explicit schema keeps text formats lossless for
-    * the scalar columns; maps require parquet/orc).
+    * the scalar columns; maps require parquet/orc). Installs the
+    * [[FamilyScan]] planner extension on `spark` and marks the relation
+    * as a family, which holds the layout contract above.
     */
   def open(spark: SparkSession, root: String, domain: String, family: String,
-      format: String = "parquet"): DataFrame =
-    spark.read.schema(schema).format(format).load(s"$root/$domain/$family")
+      format: String = "parquet"): DataFrame = {
+    FamilyScan.install(spark)
+    spark.read.schema(schema).format(format).option(FamilyScan.Marker, "true")
+      .load(s"$root/$domain/$family")
+  }
 
   /** Open a family as a STREAMING source — the read half of the ingest
     * topology whose write half is
@@ -1687,17 +1699,12 @@ object TimeSeriesTable {
 
   /** Time-range scan `[start, end)` — the FetchSeries analogue
     * (executor.go:426-478). The `ts` predicate pushes into parquet
-    * row-group stats; Spark cannot infer `dt` bounds from a `ts`
-    * predicate on its own, so when the frame is partitioned (has `dt`)
-    * the equivalent date bounds are added explicitly — that is what
-    * turns the scan into a partition-pruned one at 100 TB.
+    * row-group stats, and on a frame opened with [[open]] it also
+    * prunes date partitions ([[FamilyScan]]). A frame not opened with
+    * [[open]] gets no `dt` bounds: nothing says its `dt` is `to_date(ts)`.
     */
-  def timeRange(df: DataFrame, start: Timestamp, end: Timestamp): DataFrame = {
-    val base = df.filter(col("ts") >= lit(start) && col("ts") < lit(end))
-    if (df.columns.contains("dt"))
-      base.filter(col("dt") >= to_date(lit(start)) && col("dt") <= to_date(lit(end)))
-    else base
-  }
+  def timeRange(df: DataFrame, start: Timestamp, end: Timestamp): DataFrame =
+    df.filter(col("ts") >= lit(start) && col("ts") < lit(end))
 
   /** Fetch one series over a time range, time-ordered — the reference's
     * Fetch + k-way merge (boostseriesiterator.go:157-343) is just a sort.

@@ -58,6 +58,22 @@ class PlanShapeSpec extends SparkSpec {
       s"calendar-shifted ts bound must still push into the scan:\n$monthPlan")
   }
 
+  test("dialect ts window over an opened family prunes dt partitions and still pushes ts") {
+    val root = java.nio.file.Files.createTempDirectory("graft-planshape").toString
+    TimeSeriesTable.append(
+      TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
+    val stored = TimeSeriesTable.open(spark, root, "dom", "events")
+    val plan = planOf(BoostQL.sql("SELECT ts, click FROM dom.events WHERE click > 50.0 " +
+      "AND ts >= '2024-01-10 03:00:00' AND ts < '2024-01-10 21:00:00'", _ => stored))
+    assert("""PartitionFilters: \[[^\]]*\(dt#\d+ >= 2024-01-10\), \(dt#\d+ <= 2024-01-10\)""".r
+      .findFirstIn(plan).isDefined, s"the ts window must prune dt partitions:\n$plan")
+    assert(plan.contains("GreaterThanOrEqual(ts,") && plan.contains("LessThan(ts,"),
+      s"the ts bounds must still push into the scan:\n$plan")
+    // the post-scan filter reads its bounds as parameters but prints them
+    assert("""Filter .*\(ts#\d+ >= 2024-01-10 03:00:00\)""".r.findFirstIn(plan).isDefined,
+      s"the filter must print its ts bound:\n$plan")
+  }
+
   test("stream-join tier: per-side series filters push to the scans; " +
       "native interval term, no micros round-trip") {
     val root = java.nio.file.Files.createTempDirectory("graft-planshape").toString

@@ -2745,6 +2745,26 @@ class BoostQLSpec extends SparkSpec {
     assert(q.select == Seq(FieldItem(RawName(Seq("explain")))))
   }
 
+  test("a leading comment does not break EXPLAIN") {
+    val plan = BoostQL.sql("/* c */ -- note\n EXPLAIN SELECT click FROM dom.events " +
+      "WHERE click < 100.0", (_: ((String, String))) => fam).collect()(0).getString(0)
+    assert(plan.contains("== Physical Plan =="), plan)
+  }
+
+  test("a leading comment does not break DESCRIBE") {
+    val described = BoostQL.sql("/* c */ DESCRIBE dom.events",
+      (_: ((String, String))) => fam).collect().map(_.getString(0)).toSeq
+    assert(described == BoostQL.sql("DESCRIBE dom.events",
+      (_: ((String, String))) => fam).collect().map(_.getString(0)).toSeq)
+    assert(described.nonEmpty)
+  }
+
+  test("a leading comment keeps the write-statement guidance for DELETE") {
+    val e = intercept[Compiler.CompileException](BoostQL.sql(
+      "/* c */ DELETE FROM dom.events WHERE click > 0.0", (_: ((String, String))) => fam))
+    assert(e.getMessage.contains("sqlDelete"), e.getMessage)
+  }
+
   test("parser: derived table sources (FROM and JOIN operands)") {
     val q = Parser.parse("SELECT t.c FROM (SELECT cpu AS c FROM dom.f) AS t")
     q.source match {
